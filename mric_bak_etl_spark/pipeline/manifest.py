@@ -36,6 +36,10 @@ def manifest_from_directory(spark: SparkSession, path: str, glob: str | None = N
     Uses the binaryFile source but selects ONLY metadata columns, so Spark
     prunes the content read — this is a listing, not a download. Works the
     same over local paths and ``abfss://`` / ``s3a://`` URIs.
+
+    ``file_key`` is the name as Spark's ``_metadata.file_name`` spells it
+    (URL-encoded: a space reads ``%20``). A later scan that filters
+    ``_metadata.file_name == file_key`` reads that one file and no other.
     """
     reader = spark.read.format("binaryFile")
     if glob:
@@ -44,6 +48,7 @@ def manifest_from_directory(spark: SparkSession, path: str, glob: str | None = N
     return df.select(
         F.col("path"),
         F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
+        F.col("_metadata.file_name").alias("file_key"),
         F.col("length"),
         F.col("modificationTime"),
     )
@@ -76,12 +81,16 @@ def is_empty(names: DataFrame) -> bool:
 def latest_snapshot(names: DataFrame) -> DataFrame:
     """R5+R6: the "latest" snapshot = lexicographic max of the name.
 
-    One-row DataFrame. ``agg(max)`` == ``orderBy(desc).limit(1)`` (the
-    latter fuses to TakeOrderedAndProject); max is cheaper still — partial
-    max per partition, single-row combine, no heap.
+    One-row DataFrame carrying every column of the max-name row; all of
+    them are null when ``names`` is empty, which is how the R4 empty guard
+    reads it. ``agg(max)`` == ``orderBy(desc).limit(1)`` (the latter fuses
+    to TakeOrderedAndProject); max is cheaper still — partial max per
+    partition, single-row combine, no heap. The max runs over a struct led
+    by ``name``, so the other columns ride along with the winner.
 
     Fidelity note: lexicographic order of the *filename*, NOT modification
     time — exactly the reference's semantics (`src/bak_unload.ps1:44-52`),
     which its naming convention makes equivalent to recency.
     """
-    return names.agg(F.max("name").alias("name"))
+    rest = [c for c in names.columns if c != "name"]
+    return names.agg(F.max(F.struct("name", *rest)).alias("latest")).select("latest.*")

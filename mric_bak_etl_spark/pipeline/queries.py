@@ -236,7 +236,7 @@ def unzip_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     archives = spark.createDataFrame(
         _fixture_zip_bytes(), "path string, content binary"
     )
-    payload = unzip.pick_payload(unzip.unzip_entries(archives), ".bak")
+    payload = unzip.unzip_entries(archives, ".bak")
     return payload.select(
         "archive_path",
         "entry_name",

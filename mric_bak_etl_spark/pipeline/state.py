@@ -13,8 +13,8 @@ checkpoint for free. Commit stays write-after-load, preserving the
 reference's at-least-once + idempotent-replace semantics.
 
 Scale notes (100 TB): the state table is tiny (one row per snapshot ever
-seen) → always the broadcast side of the anti-join; the candidate set never
-shuffles.
+seen) → always the broadcast side of the anti-join or flag join; the
+candidate set never shuffles.
 """
 
 from __future__ import annotations
@@ -42,6 +42,17 @@ def filter_unprocessed(candidates: DataFrame, state: DataFrame) -> DataFrame:
     """R7: left anti-join candidates vs processed names — the 'already
     imported?' check. State is broadcast (it is tiny by construction)."""
     return candidates.join(F.broadcast(state), on="name", how="left_anti")
+
+
+def flag_processed(candidates: DataFrame, state: DataFrame) -> DataFrame:
+    """R7 as a column: left-join candidates to the broadcast processed names
+    and add ``seen`` (true when the name was already imported). Unlike the
+    anti-join it keeps every candidate, so one collect of a one-row
+    candidate set answers both early exits."""
+    flags = state.select("name", F.lit(True).alias("seen"))
+    return candidates.join(F.broadcast(flags), on="name", how="left").select(
+        *candidates.columns, F.coalesce("seen", F.lit(False)).alias("seen")
+    )
 
 
 def commit_state(spark: SparkSession, state_dir: str, names: DataFrame) -> None:

@@ -18,6 +18,7 @@ coalescing at runtime, and ``spark.sql.shuffle.partitions`` becomes the
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +51,10 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Runtime confs that failed to apply in this process: key -> error.
+CONF_FAILURES: dict[str, str] = {}
+
+
 def _shuffle_partition_conf() -> dict[str, str]:
     # Initial (pre-AQE) shuffle parallelism sized to the engine instead of
     # Spark's global default of 200: on a driver-provided session every
@@ -64,14 +69,22 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable confs this engine depends on.
 
     Safe to call repeatedly and on sessions we did not build (the driver's).
+    A conf that does not apply (static on some builds) does not stop the
+    run, but it is reported: one ``RuntimeWarning`` per key per process,
+    and the key and its error stay in :data:`CONF_FAILURES`.
     """
     for key, value in {**_RUNTIME_CONFS, **_shuffle_partition_conf()}.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # A conf may be static on some builds; prefer degraded operation
-            # over refusing to run.
-            pass
+        except Exception as exc:
+            if key not in CONF_FAILURES:
+                CONF_FAILURES[key] = f"{type(exc).__name__}: {exc}"
+                warnings.warn(
+                    f"runtime conf {key}={value} did not apply: "
+                    f"{CONF_FAILURES[key]}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return spark
 
 

@@ -707,7 +707,9 @@ def streaming_register_maintenance(
         )
         q.awaitTermination()
     finally:
-        if prev_parts is not None:
+        if prev_parts is None:
+            spark.conf.unset(shuffle_conf)
+        else:
             spark.conf.set(shuffle_conf, prev_parts)
     from mric_bak_etl_spark.streaming.stateful import read_committed_version
 

@@ -7,21 +7,29 @@ from __future__ import annotations
 
 import io
 import os
+import warnings
 import zipfile
 
 import pytest
+from pyspark.sql import functions as F
 
-from mric_bak_etl_spark.pipeline import manifest
+from mric_bak_etl_spark.pipeline import manifest, runner, unzip
 from mric_bak_etl_spark.pipeline.runner import run_batch, run_streaming
 
 
-def make_zip(path: str, members: dict[str, bytes]) -> None:
+def zip_bytes(members: list[tuple[str, bytes]]) -> bytes:
     buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        for name, data in members.items():
-            zf.writestr(name, data)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # zipfile warns on duplicate names
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+            for name, data in members:
+                zf.writestr(name, data)
+    return buf.getvalue()
+
+
+def make_zip(path: str, members: dict[str, bytes]) -> None:
     with open(path, "wb") as f:
-        f.write(buf.getvalue())
+        f.write(zip_bytes(list(members.items())))
 
 
 @pytest.fixture
@@ -86,6 +94,113 @@ def test_payload_pick_last_match_wins(spark, dirs):
     result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
     assert result.status == "loaded"
     assert payload_texts(spark, dirs["out"]) == ["last"]
+
+
+def scan_file_counts(df) -> list[int]:
+    """``numFiles`` of every file scan in ``df``'s executed plan; the
+    metric is filled in when ``df`` runs."""
+    counts = []
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return walk(node.plan())
+        metrics = node.metrics()
+        if metrics.contains("numFiles"):
+            counts.append(metrics.apply("numFiles").value())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return counts
+
+
+def test_refresh_reads_only_the_winning_archive(spark, dirs, monkeypatch):
+    # The reference downloads one blob per run (src/bak_unload.ps1:69-70);
+    # the load's scan must be pruned to that file, not the container.
+    for day in range(1, 6):
+        make_zip(
+            os.path.join(dirs["blob"], f"backup_2024_07_0{day}.zip"),
+            {"p.bak": f"day {day}".encode(), "readme.txt": b"decoy"},
+        )
+    make_zip(os.path.join(dirs["blob"], "notes.txt.gz"), {"x": b"not a snapshot"})
+    written = []
+    write = runner.overwrite_snapshot
+
+    def capture(df, path):
+        written.append(df)
+        write(df, path)
+
+    monkeypatch.setattr(runner, "overwrite_snapshot", capture)
+    result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert (result.status, result.snapshot, result.entries) == (
+        "loaded", "backup_2024_07_05.zip", 1,
+    )
+    assert payload_texts(spark, dirs["out"]) == ["day 5"]
+    (loaded,) = written
+    loaded.collect()
+    assert scan_file_counts(loaded) == [1]
+
+
+def old_pick_payload(entries, pattern):
+    """The semi-join pick that lived outside the unzip stage: matching
+    entries semi-joined to the max matching name per archive."""
+    matches = entries.filter(F.col("entry_name").contains(pattern))
+    last_name = matches.groupBy("archive_path").agg(
+        F.max("entry_name").alias("entry_name")
+    )
+    return matches.join(last_name, on=["archive_path", "entry_name"], how="left_semi")
+
+
+def test_in_stage_payload_pick_matches_semi_join(spark):
+    archives = spark.createDataFrame(
+        [
+            # Duplicate names: every copy of the last match is kept.
+            ("/b/dup.zip", zip_bytes([
+                ("a.bak", b"a"), ("z.bak", b"z1"), ("z.bak", b"z2"),
+                ("readme.txt", b"r"),
+            ])),
+            # Directory entries never count, even when their name matches.
+            ("/b/dirs.zip", zip_bytes([
+                ("zz.bak/", b""), ("sub/", b""), ("sub/b.bak", b"sub"),
+                ("a.bak", b"a"),
+            ])),
+            ("/b/none.zip", zip_bytes([("notes.txt", b"no payload")])),
+            ("/b/empty.zip", zip_bytes([])),
+        ],
+        "path string, content binary",
+    )
+
+    def rows(df):
+        return sorted(
+            (r["archive_path"], r["entry_name"], r["entry_size"], bytes(r["entry_bytes"]))
+            for r in df.collect()
+        )
+
+    got = rows(unzip.unzip_entries(archives, ".bak"))
+    assert got == rows(old_pick_payload(unzip.unzip_entries(archives), ".bak"))
+    assert got == [
+        ("/b/dirs.zip", "sub/b.bak", 3, b"sub"),
+        ("/b/dup.zip", "z.bak", 2, b"z1"),
+        ("/b/dup.zip", "z.bak", 2, b"z2"),
+    ]
+
+
+def test_snapshot_name_with_space_and_percent(spark, dirs):
+    # The load's scan key is Spark's URL-encoded _metadata.file_name; it must
+    # select the same file as the listing's decoded name.
+    make_zip(os.path.join(dirs["blob"], "backup 2024%06 [a].zip"), {"o.bak": b"old"})
+    make_zip(os.path.join(dirs["blob"], "backup 2024%07 [b].zip"), {"n.bak": b"new"})
+    first = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert (first.status, first.snapshot, first.entries) == (
+        "loaded", "backup 2024%07 [b].zip", 1,
+    )
+    assert payload_texts(spark, dirs["out"]) == ["new"]
+    again = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert again.status == "already_imported"
 
 
 def test_crash_replay_between_load_and_commit(spark, dirs):
